@@ -24,6 +24,7 @@ import os
 import statistics
 import sys
 import time
+import warnings
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -233,7 +234,12 @@ def _anchor_ratio_median(
 ) -> float | None:
     """Median of per-query reading / idle-anchor ratios over a basket —
     the interference-wave telltale (see the anchor-table comment)."""
-    scale = float(os.environ.get(scale_env, "1.0"))
+    raw = os.environ.get(scale_env, "1.0")
+    try:
+        scale = float(raw)
+    except ValueError:
+        warnings.warn(f"{scale_env}={raw!r} is not a number; using 1.0")
+        scale = 1.0
     ratios = [
         timings[q] / (a * scale)
         for q, a in anchors.items()

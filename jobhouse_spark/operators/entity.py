@@ -17,7 +17,10 @@ Pipeline (all deterministic, so a SQL oracle can replay it exactly):
    names sharing a 4-gram, stop-grams above a document-frequency cap
    dropped, |length delta| <= max_dist Levenshtein lower-bound
    prefilter. Never a cross product.
-3. VERIFY: exact ``levenshtein() <= max_dist`` on the surviving pairs.
+3. VERIFY: exact ``levenshtein() <= max_dist`` on the surviving pairs,
+   in Spark's banded (thresholded) form: it computes only the DP band
+   the bound allows and gives up on a pair once its distance passes
+   the bound — nearly every candidate is a rejection.
 4. CLUSTER: transitive closure of the verified pair graph via
    min-label propagation (operators/graph.connected_components) —
    string labels; the canonical form is the lexicographic minimum
@@ -112,6 +115,16 @@ def _deletion_keys(name_col: str, max_dist: int) -> Column:
     return F.expr(cur)
 
 
+def _within_dist(max_dist: int) -> Column:
+    """Exact ``levenshtein(src, dst) <= max_dist`` in its banded form:
+    given a threshold, Spark fills only the diagonal band of width
+    2 * max_dist + 1 of the DP table and returns -1 when the distance
+    passes the bound (at once when the lengths differ by more), so a
+    check costs O(max_dist * length), not O(length^2). Almost every
+    candidate is a rejection, so this is most of the verify cost."""
+    return F.levenshtein("src", "dst", max_dist) >= 0
+
+
 def resolve_entities(
     names: DataFrame,
     name_col: str = "name",
@@ -146,9 +159,10 @@ def resolve_entities(
       ~C(L,2) key expansion is confined to the short stratum, which is
       alphabet-bounded and tiny in real entity data.
 
-    Both strata verify with exact ``levenshtein() <= max_dist`` before
-    the min-label transitive closure. ``names`` may contain duplicates
-    and raw (un-normalized) strings; callers join the result back on
+    Both strata verify with exact ``levenshtein() <= max_dist`` (the
+    banded form, _within_dist) before the min-label transitive
+    closure. ``names`` may contain duplicates and raw (un-normalized)
+    strings; callers join the result back on
     ``normalize_entity_name(raw)``.
 
     Scale: every stage runs on DISTINCT normalized names; the prefix
@@ -234,7 +248,7 @@ def resolve_entities(
         )
 
     edges = cand_long.unionAll(cand_short).filter(
-        F.levenshtein("src", "dst") <= max_dist
+        _within_dist(max_dist)
     )
     if stats_out is not None:
         edges = edges.persist()
@@ -372,7 +386,7 @@ def _incremental_candidate_edges(
     )
 
     return cand_long.unionAll(cand_short).filter(
-        F.levenshtein("src", "dst") <= max_dist
+        _within_dist(max_dist)
     )
 
 
@@ -438,28 +452,43 @@ def resolve_entities_incremental(
 
     Chained (day-after-day) application: truncate the returned
     mapping's lineage between applications (write it to a table, or
-    ``localCheckpoint``) — this function references ``stored_mapping``
-    four times, so feeding day k's un-truncated output in as day k+1's
-    stored map grows the analyzed logical plan ~4x per day and
-    plan-analysis time comes to dominate (measured: per-step walls
-    rose 56.6->98.7 s over 5 chained days at 1M entities while batch
-    sizes SHRANK; flat once checkpointed — ENTITY_INC.json). In
-    production the stored map lives in a parquet table between days,
-    which truncates lineage for free.
+    ``localCheckpoint``) — each apply executes ``stored_mapping`` in
+    four places (anti-join, union, contraction, relabel), so feeding
+    day k's un-truncated output in as day k+1's stored map re-runs
+    every earlier day's plan and plan-analysis time comes to dominate
+    (measured: per-step walls rose 56.6->98.7 s over 5 chained days at
+    1M entities while batch sizes SHRANK; flat once checkpointed —
+    ENTITY_INC.json). In production the stored map lives in a parquet
+    table between days, which truncates lineage for free.
     """
-    old_nodes = stored_mapping.select(F.col("name"))
-    new_nodes = (
-        batch_names.select(normalize_entity_name(F.col(name_col)).alias("name"))
-        .filter(F.col("name") != "")
-        .distinct()
-        .join(old_nodes, "name", "left_anti")
-    )
-    union_nodes = old_nodes.unionByName(new_nodes)
+    new_nodes = _new_batch(batch_names, stored_mapping, name_col)
+    union_nodes = stored_mapping.select("name").unionByName(new_nodes)
     edges_new = _incremental_candidate_edges(
         new_nodes, union_nodes, gram_len, max_dist
     )
     return _apply_verified_edges(
         new_nodes, edges_new, stored_mapping, stats_out, max_iterations
+    )
+
+
+def _new_batch(
+    batch_names: DataFrame, stored_mapping: DataFrame, name_col: str
+) -> DataFrame:
+    """The batch's NEW names — normalized, distinct, not already in the
+    stored mapping — computed once for both incremental resolvers. The
+    relation feeds the prefix window, the probe union, both deletion-key
+    sides, the closure's node set, the new mapping rows and the updated
+    index tables; as a lazy plan each of those consumers would re-run
+    the normalize/distinct/anti-join, the stored-domain shuffle
+    included. Batch-sized by the resolvers' contract, so it is
+    materialized eagerly with the same localCheckpoint idiom as the
+    verified edges in _apply_verified_edges."""
+    return (
+        batch_names.select(normalize_entity_name(F.col(name_col)).alias("name"))
+        .filter(F.col("name") != "")
+        .distinct()
+        .join(stored_mapping.select("name"), "name", "left_anti")
+        .localCheckpoint(eager=True)
     )
 
 
@@ -520,7 +549,6 @@ def _apply_verified_edges(
     )
     if stats_out is not None:
         edges_c = edges_c.persist()
-        new_nodes = new_nodes.persist()
         stats_out.update(
             new_nodes=new_nodes.count(), contracted_edges=edges_c.count()
         )
@@ -544,7 +572,6 @@ def _apply_verified_edges(
     finally:
         if stats_out is not None:
             edges_c.unpersist()
-            new_nodes.unpersist()
 
     # new names -> their component label
     new_rows = comp.join(
@@ -628,7 +655,7 @@ class EntityGramIndex:
         delkeys: DataFrame,
         gram_df: DataFrame,
         gram_len: int = 4,
-        max_dist: int = 1,
+        max_dist: int = 2,
     ) -> None:
         self.postings = postings
         self.delkeys = delkeys
@@ -692,7 +719,7 @@ class EntityGramIndex:
 def build_entity_index(
     names: DataFrame,
     gram_len: int = 4,
-    max_dist: int = 1,
+    max_dist: int = 2,
     name_col: str = "name",
 ) -> EntityGramIndex:
     """Build the blocking index over a name domain (normally the
@@ -749,18 +776,19 @@ def resolve_entities_incremental_indexed(
     the batch side is explicitly broadcast into both candidate joins,
     so the stored postings/delkeys stream map-side with NO shuffle of
     the stored domain; the only stored-domain shuffles left are the
-    single-column contraction joins, which bucketing the stored tables
-    by name would co-locate on a real cluster. Contract: ``batch_names``
-    is a daily delta (broadcast-sized); for a domain-sized batch use
-    resolve_entities.
+    new-vs-stored anti-join and the single-column contraction joins,
+    which bucketing the stored tables by name would co-locate on a
+    real cluster. The anti-join runs ONCE per apply: the new-name
+    batch is checkpointed up front (_new_batch), and the prefix
+    window, the probe union, both deletion-key sides, the closure's
+    nodes, the new mapping rows and the updated index's postings and
+    delkeys all read those blocks — neither the returned mapping nor
+    the returned index references ``batch_names`` any more. Candidates
+    are verified with the banded levenshtein (_within_dist). Contract:
+    ``batch_names`` is a daily delta (broadcast-sized); for a
+    domain-sized batch use resolve_entities.
     """
-    old_nodes = stored_mapping.select(F.col("name"))
-    new_nodes = (
-        batch_names.select(normalize_entity_name(F.col(name_col)).alias("name"))
-        .filter(F.col("name") != "")
-        .distinct()
-        .join(old_nodes, "name", "left_anti")
-    )
+    new_nodes = _new_batch(batch_names, stored_mapping, name_col)
     edges_new = _indexed_candidate_edges(new_nodes, index)
     mapping = _apply_verified_edges(
         new_nodes, edges_new, stored_mapping, stats_out, max_iterations
@@ -827,5 +855,5 @@ def _indexed_candidate_edges(
     )
 
     return cand_long.unionAll(cand_short).filter(
-        F.levenshtein("src", "dst") <= max_dist
+        _within_dist(max_dist)
     )

@@ -625,6 +625,9 @@ def minhash_near_duplicates(
             ).alias("p")
         )
         .select("p.doc_a", "p.doc_b")
+        # a doc id that occurs twice in the corpus sits twice in its
+        # buckets' member lists; never pair it with itself
+        .filter(F.col("doc_a") != F.col("doc_b"))
         .distinct()
     )
     out = _exact_jaccard_pairs(cand, featured, jaccard_threshold)

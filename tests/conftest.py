@@ -29,15 +29,28 @@ def pytest_configure(config):
     )
 
 
+_CAMPAIGN_SKIPPED = pytest.StashKey[int]()
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("JH_FULL_TESTS"):
         return
     skip = pytest.mark.skip(
         reason="campaign test: set JH_FULL_TESTS=1 (or run tools/gate.sh)"
     )
-    for item in items:
-        if "campaign" in item.keywords:
-            item.add_marker(skip)
+    campaign = [item for item in items if "campaign" in item.keywords]
+    for item in campaign:
+        item.add_marker(skip)
+    config.stash[_CAMPAIGN_SKIPPED] = len(campaign)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    # a green default run must say how much it did not exercise
+    n = config.stash.get(_CAMPAIGN_SKIPPED, 0)
+    if n:
+        terminalreporter.write_line(
+            f"{n} campaign tests skipped; set JH_FULL_TESTS=1 to run them"
+        )
 
 SF_SMOKE = os.environ.get("JH_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("JH_ORACLE_SF_DIR", "/root/testdata/sf0.01")

@@ -194,6 +194,18 @@ def test_wall_ratio_telltale_catches_cpu_flat_waves():
     assert _wall_ratio(bench, clean_c8) <= bench._WALL_INFLATION_FLAG
 
 
+def test_malformed_anchor_scale_falls_back_to_unscaled(monkeypatch):
+    """A typo'd SPARK_GRAFT_*_ANCHOR_SCALE must not abort the bench
+    mid-measurement: it warns and reads the anchors unscaled."""
+    bench = _load_bench()
+    walls = {"s1_parquet_scan": 0.366, "p2_filter": 0.342}
+    monkeypatch.delenv("SPARK_GRAFT_WALL_ANCHOR_SCALE", raising=False)
+    unscaled = _wall_ratio(bench, walls)
+    monkeypatch.setenv("SPARK_GRAFT_WALL_ANCHOR_SCALE", "1,5")
+    with pytest.warns(UserWarning, match="SPARK_GRAFT_WALL_ANCHOR_SCALE"):
+        assert _wall_ratio(bench, walls) == unscaled == 2.0
+
+
 def test_cpu_inflated_attempt_triggers_retry(monkeypatch, capsys):
     """An attempt whose only contention signal is the cpu telltale must
     lose to a clean retry — the c8 failure mode end to end."""

@@ -173,3 +173,99 @@ def test_index_refresh_df_is_equivalence_preserving(spark, corpus):
         probe, resolve_entities(day1.unionByName(batch)), stale
     )
     assert _rows(m1) == _rows(m2)
+
+
+def test_index_defaults_match_resolver_distance(spark):
+    """``build_entity_index`` with default arguments must index at the
+    resolvers' default distance (2): a batch name at distance EXACTLY 2
+    from a stored name joins that stored cluster, in both strata —
+    ``granitx harbxr`` (long) and ``zxrbx`` (short)."""
+    day1 = _df(spark, ["Granite Harbor", "Granite Harbor LLC",
+                       "Cascade Delta", "Zorba", "Juno"])
+    batch = _df(spark, ["granitx harbxr", "zxrbx", "Nimbus Freight"])
+
+    stored = resolve_entities(day1)
+    idx = build_entity_index(day1)
+    assert idx.max_dist == 2
+    indexed, _ = resolve_entities_incremental_indexed(batch, stored, idx)
+
+    got = _rows(indexed)
+    assert got == _rows(resolve_entities(day1.unionByName(batch)))
+    canon = dict(got)
+    assert canon["granitx harbxr"] == "granite harbor"
+    assert canon["zxrbx"] == canon["zorba"]
+
+
+def test_banded_levenshtein_verify_matches_plain(spark):
+    """The verify filter (thresholded ``levenshtein(src, dst, t) >= 0``)
+    keeps exactly the pairs the plain ``levenshtein <= t`` keeps, on
+    seeded random pairs with multibyte characters (2-, 3- and 4-byte
+    UTF-8) and edit distances on both sides of every threshold."""
+    from pyspark.sql import functions as F
+
+    from jobhouse_spark.operators.entity import _within_dist
+
+    rng = random.Random(2203)
+    alphabet = "abcxyz éжд日本\U0001F600"
+
+    def word(n):
+        return "".join(rng.choice(alphabet) for _ in range(n))
+
+    def edited(s, k):
+        chars = list(s)
+        for _ in range(k):
+            op = rng.randrange(3)
+            i = rng.randrange(len(chars) + 1)
+            if op == 0:
+                chars.insert(i, rng.choice(alphabet))
+            elif chars and op == 1:
+                chars.pop(min(i, len(chars) - 1))
+            elif chars:
+                chars[min(i, len(chars) - 1)] = rng.choice(alphabet)
+        return "".join(chars)
+
+    pairs = []
+    for _ in range(4000):
+        a = word(rng.randrange(0, 12))
+        b = word(rng.randrange(0, 12)) if rng.random() < 0.2 else edited(
+            a, rng.randrange(0, 6))
+        pairs.append((a, b))
+    df = spark.createDataFrame(pairs, "src string, dst string")
+
+    plain = F.levenshtein("src", "dst")
+    aggs = []
+    for t in (1, 2, 3):
+        kept = _within_dist(t)
+        aggs += [
+            F.sum((kept != (plain <= t)).cast("int")).alias(f"diff{t}"),
+            F.sum((plain == t).cast("int")).alias(f"at{t}"),
+            F.sum((plain == t + 1).cast("int")).alias(f"past{t}"),
+        ]
+    r = df.agg(*aggs).first()
+    for t in (1, 2, 3):
+        assert r[f"diff{t}"] == 0, f"banded verify disagrees at t={t}"
+        # the set straddles each bound, so agreement is not vacuous
+        assert r[f"at{t}"] > 50 and r[f"past{t}"] > 50, r
+
+
+def test_indexed_apply_reads_the_batch_once(spark, tmp_path):
+    """The day's new-name batch is evaluated once and checkpointed, so
+    the plans handed back — the updated mapping and the updated index's
+    postings and delkeys — read those blocks and never the batch's
+    source relation."""
+    day1 = _df(spark, ["Granite Harbor", "Cascade Delta", "Zorba",
+                       "Aurora Analytics"])
+    src = str(tmp_path / "batch_src")
+    _df(spark, ["granite harbxr", "Nimbus Freight", "zorbx", "ab"]) \
+        .write.parquet(src)
+    batch = spark.read.parquet(src)
+    assert any(src in f for f in batch.inputFiles())
+
+    stored = resolve_entities(day1)
+    idx = build_entity_index(day1)
+    mapping, idx2 = resolve_entities_incremental_indexed(batch, stored, idx)
+    for name, df in (("mapping", mapping), ("postings", idx2.postings),
+                     ("delkeys", idx2.delkeys)):
+        assert not any(src in f for f in df.inputFiles()), name
+
+    assert _rows(mapping) == _rows(resolve_entities(day1.unionByName(batch)))

@@ -57,6 +57,21 @@ def test_minhash_short_docs_excluded(spark):
     assert found == {(4, 5)}, found
 
 
+def test_minhash_duplicated_doc_id_no_self_pair(spark):
+    """A doc id that occurs twice sits twice in its buckets' member
+    lists; the in-row pair expansion must not pair it with itself."""
+    text = "the quick brown fox jumps over the lazy dog again"
+    rows = [(1, text), (1, text), (2, text + " today"),
+            (3, "an entirely unrelated document about something else")]
+    docs = spark.createDataFrame(rows, "doc_id int, text string")
+    pairs = minhash_near_duplicates(
+        docs, jaccard_threshold=0.5, num_hash_tables=3
+    ).collect()
+    found = {(r.doc_a, r.doc_b) for r in pairs}
+    assert all(a != b for a, b in found), found
+    assert (1, 2) in found, found
+
+
 def test_lsh_topk_recall_vs_brute_force(spark, sf_dir):
     """BRP-LSH candidates must include most of the exact top-10
     (Euclidean vs cosine mismatch allowed, so threshold is loose)."""

@@ -9,7 +9,8 @@
 #                              #   pytest suite + sf0.01 sim + audit)
 #   ./tools/gate.sh --fast     # pytest + sf0.001 driver sim
 #   ./tools/gate.sh --full     # everything incl. campaign-marked tests
-#                              #   (JH_FULL_TESTS=1) — pre-snapshot run
+#                              #   (JH_FULL_TESTS=1) and the benchmark's
+#                              #   self-test — pre-snapshot run
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -18,6 +19,7 @@ FAST=${1:-}
 echo "=== gate 1/3: pytest ==="
 if [[ "$FAST" == "--full" ]]; then
   JH_FULL_TESTS=1 python -m pytest tests/ -x -q
+  python3 -m pytest perfbench -q -p no:cacheprovider
 else
   python -m pytest tests/ -x -q
 fi
